@@ -188,30 +188,23 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _collapse_probe_min_bytes() -> int:
-    # Round 13: floor lowered 256 MiB -> 1 MiB. The round-12 floor
-    # assumed "below it even a maximally dup-heavy input cannot repay
-    # the probe job" — MEASURED FALSE at sf1: the 10x replica's name
-    # clusters put customer_fuzzy_pairs at 117.8 s with the probe
-    # skipped (member-level variant buckets go quadratic in copy
-    # depth) vs 22.4 s with it on, entity_groups 22.4 -> 6.5 s,
-    # containment 28.1 -> 10.2 s, while the probe costs one ~0.3 s
-    # job. 1 MiB keeps every round-12 bench-scale win (the largest
-    # sf0.1 dedup input, embeddings, estimates 799 KiB — all sf0.1
-    # probes stay skipped, jobs unchanged) and restores the probe from
-    # sf1 up (smallest probing input estimates 1.04 MiB; anything
-    # bigger clears the floor further). Worst-case regret below the
-    # floor is bounded: <=1 MiB of collapsed rows whose candidate
-    # blow-up the levenshtein/band verify chews through in seconds.
-    # Opaque lineage still fails OPEN to the probe.
-    import os
-
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_COLLAPSE_PROBE_MIN_BYTES",
-            str(1024 * 1024),
-        )
-    )
+# Input-size floor below which _collapse_exact skips its probe job.
+# Round 13: floor lowered 256 MiB -> 1 MiB. The round-12 floor
+# assumed "below it even a maximally dup-heavy input cannot repay
+# the probe job" — MEASURED FALSE at sf1: the 10x replica's name
+# clusters put customer_fuzzy_pairs at 117.8 s with the probe
+# skipped (member-level variant buckets go quadratic in copy
+# depth) vs 22.4 s with it on, entity_groups 22.4 -> 6.5 s,
+# containment 28.1 -> 10.2 s, while the probe costs one ~0.3 s
+# job. 1 MiB keeps every round-12 bench-scale win (the largest
+# sf0.1 dedup input, embeddings, estimates 799 KiB — all sf0.1
+# probes stay skipped, jobs unchanged) and restores the probe from
+# sf1 up (smallest probing input estimates 1.04 MiB; anything
+# bigger clears the floor further). Worst-case regret below the
+# floor is bounded: <=1 MiB of collapsed rows whose candidate
+# blow-up the levenshtein/band verify chews through in seconds.
+# Opaque lineage still fails OPEN to the probe.
+_COLLAPSE_PROBE_MIN_BYTES = 1 << 20
 
 
 def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: float = 0.05):
@@ -254,7 +247,7 @@ def _collapse_exact(df: DataFrame, id_col: str, text_col: str, min_dup_ratio: fl
     # either way. Opaque lineage estimates default to huge, so an
     # unknown size fails open to the probe.
     size = _plan_size_bytes(df)
-    if size is not None and size < _collapse_probe_min_bytes():
+    if size is not None and size < _COLLAPSE_PROBE_MIN_BYTES:
         return df, None
     fps = df.select(F.col(id_col), F.md5(F.col(text_col).cast("string")).alias("__fp"))
     total, distinct = fps.agg(
@@ -942,41 +935,82 @@ def dedup_groups(
     all_ids: DataFrame,
     id_col: str,
     max_iters: int = 10,
-    algorithm: str = "alternating",
 ) -> DataFrame:
     """Connected components over near-dup pairs: every document gets
     the MINIMUM id of its duplicate cluster as `group_id` (the keeper;
     singletons keep their own id).
 
-    Two algorithms, identical output:
+    Large-star/small-star contraction (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14). Each round applies
+    large-star (every node hangs its strictly-larger neighbors off the
+    minimum of its closed neighborhood) then small-star (every node
+    hangs its smaller neighbors and itself off its minimum neighbor);
+    the edge set contracts to min-rooted stars in O(log n) rounds
+    REGARDLESS of cluster diameter — a 50-hop duplicate chain converges
+    in ~5 rounds where min-label propagation needs 50. Each half-round
+    is one self-shuffle of the (shrinking) edge list.
 
-    - ``"alternating"`` (default): large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14). Each round applies large-star (every node hangs its
-      strictly-larger neighbors off the minimum of its closed
-      neighborhood) then small-star (every node hangs its smaller
-      neighbors and itself off its minimum neighbor); the edge set
-      contracts to min-rooted stars in O(log n) rounds REGARDLESS of
-      cluster diameter — a 50-hop duplicate chain converges in ~5
-      rounds where label propagation needs 50. Each half-round is one
-      self-shuffle of the (shrinking) edge list; this is the 100 TB
-      default.
-    - ``"label"``: iterative min-label propagation — each round joins
-      labels across the edge set and takes the min of neighbor labels;
-      O(diameter) rounds. Kept for cross-checking (the property test
-      pins both algorithms to the same fixpoint).
-
-    Both fail loudly on non-convergence within ``max_iters`` instead of
+    Fails loudly on non-convergence within ``max_iters`` instead of
     returning silently-wrong labels.
 
     `pairs`: (id_a, id_b) near-dup edges (from MinHash/SimHash/cosine).
     `all_ids`: one row per document id (so singletons appear).
     """
-    if algorithm == "alternating":
-        return _groups_alternating(pairs, all_ids, id_col, max_iters)
-    if algorithm == "label":
-        return _groups_label_propagation(pairs, all_ids, id_col, max_iters)
-    raise ValueError(f"unknown dedup_groups algorithm: {algorithm!r}")
+    # LAZY localCheckpoint + a count() action: one job materializes
+    # the checkpoint (count computes every partition) AND yields the
+    # edge count the per-round fixpoint test needs (round-12: the
+    # eager-checkpoint-then-isEmpty shape paid 2 jobs + 2 exceptAll
+    # shuffles per round; this shape pays 1 job + 1 join per round).
+    edges = (
+        pairs.select(
+            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
+        )
+        .where(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=False)  # truncate upstream pipeline lineage
+    )
+    n_edges = edges.count()
+    # One round per driver action, no distinct between the halves.
+    # Composing 2+ rounds per action (statically or while the edge set
+    # still churns) and keeping the intra-round distinct were both
+    # measured slower (OPTIMIZATION_r12.md/_r13.md CC sections): an
+    # action already costs only 1 job + 1 join.
+    for _ in range(max_iters):
+        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
+        # Fixpoint test is EXACT (both sides are distinct sets):
+        # |new| == |old| AND new ⊆ old <=> set equality — evaluated as
+        # ONE aggregate per round whose job also materializes the lazy
+        # checkpoint (the left-join's map stage computes every
+        # new_edges partition). A checksum compare would risk a silent
+        # wrong-label convergence; this containment test cannot.
+        n_new, n_matched = new_edges.join(
+            edges.select("u", "v", F.lit(1).alias("__old")), ["u", "v"], "left"
+        ).agg(F.count(F.lit(1)), F.count("__old")).first()
+        converged = n_new == n_edges and n_matched == n_new
+        # new_edges is materialized and the fixpoint test has run: the
+        # prior round's checkpoint blocks are dead — free them now so
+        # executor storage stays O(1) in rounds, not O(rounds).
+        _free_local_checkpoint(edges)
+        n_edges = n_new
+        edges = new_edges
+        if converged:
+            break
+    else:
+        raise RuntimeError(
+            f"dedup_groups did not converge in {max_iters} rounds; "
+            "raise max_iters"
+        )
+    # At the fixpoint the edge set is a union of min-rooted stars:
+    # every non-root node carries exactly one (node, component_min) edge.
+    star = edges.select(F.col("u").alias("__node"), F.col("v").alias("__grp"))
+    return (
+        all_ids.select(F.col(id_col).alias("__node"))
+        .join(star, "__node", "left")
+        .select(
+            F.col("__node").alias(id_col),
+            F.coalesce("__grp", F.col("__node")).alias("group_id"),
+        )
+    )
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -984,19 +1018,13 @@ def _large_star(edges: DataFrame) -> DataFrame:
     node, connect each strictly-larger neighbor to the minimum of the
     node's closed neighborhood. Output is canonical by construction
     (the new target m <= u < v). One groupBy + one join on the edge
-    list — both shuffles on node ids, map-side-combinable min."""
-    return _large_star_raw(edges).distinct()
+    list — both shuffles on node ids, map-side-combinable min.
 
-
-def _large_star_raw(edges: DataFrame) -> DataFrame:
-    """_large_star WITHOUT the trailing distinct — exact when the
-    output feeds _small_star directly (round 13, guide §2.4 "remove
-    shuffles outright"): _small_star's groupBy(u).min is duplicate-
-    insensitive, its leaf join only multiplies rows that its own final
-    .distinct() removes, and no step in between counts rows. Dropping
-    the intra-round distinct removes one full (u,v) hash-aggregate
-    exchange per CC round; duplicate multiplicity is bounded by one
-    round (every round still ends with _small_star's distinct)."""
+    No trailing distinct — exact because the output feeds _small_star
+    directly: _small_star's groupBy(u).min is duplicate-insensitive,
+    its leaf join only multiplies rows that its own final .distinct()
+    removes, and no step in between counts rows. Duplicate
+    multiplicity is bounded by one round."""
     bidir = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -1039,171 +1067,6 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass  # best-effort: ContextCleaner frees blocks on GC otherwise
-
-
-# How many large*+small* rounds to compose into ONE driver action
-# (checkpoint + fixpoint test). Large-star/small-star strictly shrink
-# a potential function every non-fixpoint round and star edge sets are
-# fixed points of both halves, so testing set equality every k-th
-# composition is still exact (equality after k composed rounds implies
-# the single-round fixpoint); the cost is at most k-1 wasted rounds
-# past convergence. Module-level so the round-12 A/B probe can flip it.
-_CC_ROUNDS_PER_ACTION = 1
-
-# Round 13 (VERDICT r12 #5): ADAPTIVE composition. The round-12 static
-# k=2 A/B won on slow-converging graphs (customer_entity_groups
-# 13.10 -> 9.88 s) but lost on fast-converging ones (dedup_clusters
-# 5.87 -> 10.66 s — the composed extra round past the fixpoint is pure
-# waste), so the static default stayed 1. The adaptive form composes
-# TWO rounds into the next action only while the edge set is still
-# churning fast (fraction of new-edge rows not present in the previous
-# set >= _CC_COMPOSE_MIN_CHURN, measured by the SAME per-round
-# aggregate the fixpoint test already computes — zero extra jobs) and
-# falls back to single rounds near convergence, so the at-most-one
-# wasted round is only ever paid mid-descent, never at the tail.
-# Labels are invariant by the same argument as the static knob: extra
-# rounds past (or toward) the fixpoint cannot change the fixpoint.
-# Only active when the static knob is at its default 1.
-#
-# MEASURED AND REJECTED (round 13, tools/probe_r13_cc_adaptive.py,
-# interleaved F/T/F/T, min-of-2, parity OK everywhere): the target row
-# customer_entity_groups got WORSE at BOTH scales — sf0.1 4.43 -> 6.41 s
-# (jobs 57 -> 64), sf1 21.29 -> 28.35 s (jobs 55 -> 62). Its churn
-# fraction stays above any useful threshold until the fixpoint, so the
-# adaptive form composes nearly every action and pays the extra rounds,
-# while the round-12 lazy-checkpoint fixpoint already cut per-action
-# overhead to 1 job + 1 join — there is nothing left for composition to
-# save. Rows whose graphs converge fast never compose (identical jobs).
-# Default OFF; the knob and probe stay as documentation.
-_CC_ADAPTIVE_COMPOSE = False
-_CC_COMPOSE_MIN_CHURN = 0.10
-
-# Round 13: keep the intra-round distinct between _large_star and
-# _small_star? OFF by default — _large_star_raw's docstring carries the
-# exactness argument, tools/probe_r13_cc_distinct.py the measurements.
-_CC_INTRA_ROUND_DISTINCT = False
-
-
-def _groups_alternating(
-    pairs: DataFrame, all_ids: DataFrame, id_col: str, max_iters: int
-) -> DataFrame:
-    # LAZY localCheckpoint + a count() action: one job materializes
-    # the checkpoint (count computes every partition) AND yields the
-    # edge count the per-round fixpoint test needs (round-12: the
-    # eager-checkpoint-then-isEmpty shape paid 2 jobs + 2 exceptAll
-    # shuffles per round; this shape pays 1 job + 1 join per round).
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # truncate upstream pipeline lineage
-    )
-    n_edges = edges.count()
-    steps_static = max(1, int(_CC_ROUNDS_PER_ACTION))
-    adaptive = _CC_ADAPTIVE_COMPOSE and steps_static == 1
-    steps = steps_static
-    for _ in range(max_iters):
-        new_edges = edges
-        for _step in range(steps):
-            if _CC_INTRA_ROUND_DISTINCT:  # A/B knob; default off (r13)
-                new_edges = _small_star(_large_star(new_edges))
-            else:
-                new_edges = _small_star(_large_star_raw(new_edges))
-        new_edges = new_edges.localCheckpoint(eager=False)
-        # Fixpoint test is EXACT (both sides are distinct sets):
-        # |new| == |old| AND new ⊆ old <=> set equality — evaluated as
-        # ONE aggregate per round whose job also materializes the lazy
-        # checkpoint (the left-join's map stage computes every
-        # new_edges partition). A checksum compare would risk a silent
-        # wrong-label convergence; this containment test cannot.
-        n_new, n_matched = new_edges.join(
-            edges.select("u", "v", F.lit(1).alias("__old")), ["u", "v"], "left"
-        ).agg(F.count(F.lit(1)), F.count("__old")).first()
-        converged = n_new == n_edges and n_matched == n_new
-        # new_edges is materialized and the fixpoint test has run: the
-        # prior round's checkpoint blocks are dead — free them now so
-        # executor storage stays O(1) in rounds, not O(rounds).
-        _free_local_checkpoint(edges)
-        if adaptive:
-            # churn = fraction of the new edge set absent from the old
-            # one (n_new - n_matched over n_new), already computed by
-            # the fixpoint aggregate. Compose 2 rounds into the next
-            # action while churn is high; single rounds near the tail.
-            churn = (n_new - n_matched) / n_new if n_new else 0.0
-            steps = 2 if churn >= _CC_COMPOSE_MIN_CHURN else 1
-        n_edges = n_new
-        if converged:
-            edges = new_edges
-            break
-        edges = new_edges
-    else:
-        raise RuntimeError(
-            f"dedup_groups(alternating) did not converge in {max_iters} rounds; "
-            "raise max_iters"
-        )
-    # At the fixpoint the edge set is a union of min-rooted stars:
-    # every non-root node carries exactly one (node, component_min) edge.
-    star = edges.select(F.col("u").alias("__node"), F.col("v").alias("__grp"))
-    return (
-        all_ids.select(F.col(id_col).alias("__node"))
-        .join(star, "__node", "left")
-        .select(
-            F.col("__node").alias(id_col),
-            F.coalesce("__grp", F.col("__node")).alias("group_id"),
-        )
-    )
-
-
-def _groups_label_propagation(
-    pairs: DataFrame,
-    all_ids: DataFrame,
-    id_col: str,
-    max_iters: int = 10,
-) -> DataFrame:
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = all_ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("group_id"))
-    for _ in range(max_iters):
-        # min label among each node's neighbors (and itself)
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("group_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("group_id"), F.coalesce(F.col("nbr_min"), F.col("group_id"))
-                ).alias("group_id"),
-            )
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)  # truncate lineage per round
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.group_id") != F.col("o.group_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # Loop exhausted max_iters with the last round still changing
-        # labels: a duplicate chain longer than max_iters hops would
-        # silently get a non-minimum group_id. Fail loudly instead.
-        raise RuntimeError(
-            f"dedup_groups(label) did not converge in {max_iters} rounds; "
-            "raise max_iters (clusters deeper than expected)"
-        )
-    return labels.select(F.col("node").alias(id_col), "group_id")
 
 
 def dedup_clusters(

@@ -1953,7 +1953,7 @@ def semdedup(
             # dedup._collapse_exact discipline): below the input-size
             # floor even a maximally dup-heavy input cannot repay the
             # probe — run uncollapsed, output identical either way
-            from .dedup import _collapse_probe_min_bytes, _plan_size_bytes
+            from .dedup import _COLLAPSE_PROBE_MIN_BYTES, _plan_size_bytes
 
             # gate on the SOURCE frame, not the checkpointed
             # assignment: a localCheckpoint is a LogicalRDD whose size
@@ -1962,7 +1962,7 @@ def semdedup(
             # (round 13 — restores the round-12 skip at bench scale
             # after the floor drop to 1 MiB)
             size = _plan_size_bytes(df)
-            if size is not None and size < _collapse_probe_min_bytes():
+            if size is not None and size < _COLLAPSE_PROBE_MIN_BYTES:
                 collapse_exact = False
             else:
                 total, distinct = fps.agg(

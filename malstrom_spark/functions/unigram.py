@@ -277,7 +277,7 @@ def unigram_fit(
     # LAZY checkpoint: materialized by the seeding collect below (its
     # scan computes every partition), so fit actions drop from 5 to 4;
     # EM rounds then read the same materialized blocks as before
-    # (round 13, guide §1.2 fewer passes — A/B'd in probe_r13_unigram).
+    # (round 13, guide §1.2 fewer passes — measured by interleaved A/B).
     wc = _word_counts_df(
         df, text_col, max_words, sample_fraction, seed, lowercase
     ).localCheckpoint(eager=False)  # reused by seeding + every round

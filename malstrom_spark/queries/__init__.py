@@ -292,22 +292,9 @@ def _ensure_conf(spark: SparkSession) -> None:
 
 
 #: spread() fires only when the combined input files are under this
-#: many bytes (env-overridable). Production-scale inputs are far past
-#: it, so the extra exchange never happens off the test rig.
-_SPREAD_MAX_INPUT_BYTES = None  # resolved lazily so env changes apply
-
-
-def _spread_max_bytes() -> int:
-    import os
-
-    global _SPREAD_MAX_INPUT_BYTES
-    if _SPREAD_MAX_INPUT_BYTES is None:
-        _SPREAD_MAX_INPUT_BYTES = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_MAX_INPUT_BYTES", str(256 * 1024 * 1024)
-            )
-        )
-    return _SPREAD_MAX_INPUT_BYTES
+#: many bytes. Production-scale inputs are far past it, so the extra
+#: exchange never happens off the test rig.
+_SPREAD_MAX_INPUT_BYTES = 256 * 1024 * 1024
 
 
 def spread(
@@ -324,9 +311,9 @@ def spread(
     shuffle buys a cores-wide stage). When they are big — production
     scale — scans parallelize natively and the exchange would be pure
     cost, so this is a no-op; the threshold is derived from input
-    size, not from the core count (SPARK_GRAFT_SPREAD_MAX_INPUT_BYTES
-    to override). Use ONLY on integer-exact dataflows: repartitioning
-    reorders floating-point partial aggregation, which the oracle's
+    size (`_SPREAD_MAX_INPUT_BYTES`), not from the core count. Use
+    ONLY on integer-exact dataflows: repartitioning reorders
+    floating-point partial aggregation, which the oracle's
     exact-equality contract would catch."""
     import os
 
@@ -337,7 +324,7 @@ def spread(
         )
     except OSError:
         return df
-    if total > _spread_max_bytes():
+    if total > _SPREAD_MAX_INPUT_BYTES:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 

@@ -3168,10 +3168,10 @@ def audio_fingerprint_pairs(spark, sf_dir):
     # count, both self-join sides), and this row's fingerprints are
     # an expensive synthesized lineage (WAV gen + STFT) that Spark
     # would otherwise recompute per consumer — the r11 +49% bench
-    # move, attributed by interleaved A/B (tools/probe_r12_audio.py:
-    # lazy 2.65 s, collapse-off 1.78 s, checkpointed 1.18 s at
-    # sf0.1). Production fingerprint TABLES (parquet-backed) don't
-    # need this; it belongs to the lineage, not the operator.
+    # move, attributed by interleaved A/B (round 12: lazy 2.65 s,
+    # collapse-off 1.78 s, checkpointed 1.18 s at sf0.1). Production
+    # fingerprint TABLES (parquet-backed) don't need this; it belongs
+    # to the lineage, not the operator.
     fps = mm.audio_fingerprints(clips, "payload").localCheckpoint(eager=True)
     return mm.audio_match_pairs(fps, "doc_id", min_matches=8)
 
@@ -3230,8 +3230,8 @@ def video_frame_phash(spark, sf_dir):
     # ~2 s serial, and in a churned 109-query session the 32-way
     # round-robin exchange + python-worker fan-out costs MORE than it
     # buys: interleaved F/T/F/T A/B after a 40-query bench prefix
-    # (tools/probe_r13_vfp.py) measured spread_off 1.70/1.92/2.13 s vs
-    # spread_on 3.21/3.70/3.82 s. The driver bench read 4.91 s (r12)
+    # measured spread_off 1.70/1.92/2.13 s vs spread_on
+    # 3.21/3.70/3.82 s. The driver bench read 4.91 s (r12)
     # and 7.48 s (r13 baseline) for this row with spread on.
     docs = table(spark, sf_dir, "documents").select("doc_id").where(
         F.col("doc_id") < 200

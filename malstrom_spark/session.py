@@ -24,21 +24,36 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: AQE rewrites a sort-merge join to a shuffled-hash join when every
+#: post-shuffle partition of the build side is under this size (see
+#: the skew note in build_session; override per session via extra_conf).
+SHJ_LOCALMAP_THRESHOLD = "64m"
+
 
 def _ensure_driver_memory() -> None:
     """In local mode the driver JVM hosts every executor thread, and
     PySpark's default heap is 1g — 32 concurrent tasks OOM on any
     multi-GB shuffle. spark.driver.memory only takes effect at JVM
     launch, so it must ride PYSPARK_SUBMIT_ARGS, not the builder conf.
-    No-op once a JVM is up or when the caller already set the env."""
+    SPARK_GRAFT_DRIVER_MEM overrides the host-derived default. No-op
+    once a JVM is up or when the caller already set the env."""
     if "PYSPARK_SUBMIT_ARGS" in os.environ:
         return
     from pyspark import SparkContext
 
     if SparkContext._jvm is not None:  # JVM already launched
         return
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
+
+
+def _default_driver_memory(phys_bytes: int) -> str:
+    """48g, capped at half of physical memory so the default heap
+    cannot outgrow a small host (48g on any host with >= 96 GiB)."""
+    half_mib = phys_bytes // 2 >> 20
+    return "48g" if half_mib >= 48 << 10 else f"{half_mib}m"
 
 
 def build_session(
@@ -71,9 +86,8 @@ def build_session(
         # any cluster, and AQE skew-split keeps partitions bounded;
         # sort-merge remains the fallback whenever the conditions
         # fail. (Guide §3.1/§9 baseline.)
-        # Round 13 (VERDICT r12 #7): the threshold is env-overridable.
-        # The adversarial case, measured at sf1 (tools/
-        # probe_r13_shj_skew.py): when the STREAM side of a join is
+        # The adversarial case, measured at sf1 in round 13 (VERDICT
+        # r12 #7, OPTIMIZATION_r13.md): when the STREAM side of a join is
         # skewed enough for AQE's skew split, the SMJ->SHJ rewrite
         # still fires (its size gate checks the BUILD side only) and
         # every stream split re-builds the per-partition hash map —
@@ -82,11 +96,12 @@ def build_session(
         # construction); SMJ remains the fallback wherever a build
         # partition exceeds the threshold (plans show SortMergeJoin in
         # the initial plan and SHJ only where the gate passed). Jobs
-        # with a known skewed stream side should set the env to 0.
+        # with a known skewed stream side should pass extra_conf
+        # {"spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0"}.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"),
+            SHJ_LOCALMAP_THRESHOLD,
         )
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -87,40 +87,35 @@ def running_totals_stream(
     sdf: DataFrame,
     key_col: str = "user_id",
     value_col: str = "value",
-    exact_cents: bool = True,
 ):
     """Per-key running (count, sum) — the streaming twin of the batch
     running-sum parity query (reference stateful_map.rs:126-156).
     Emits one row per key per microbatch with totals-so-far.
 
-    ``exact_cents`` (default) accumulates the 2-decimal value column
-    as INTEGER CENTS in state: exact at any key cardinality ×
-    magnitude (cents stay far below 2^53 for any realistic total,
-    where float64 accumulation drifts after ~1e9 same-key additions
-    of large values). The emitted double is the nearest double to the
-    exact decimal total — bit-identical to a DECIMAL-summing SQL
-    oracle's final DOUBLE cast. Set False for raw float64
-    accumulation of values that are not fixed-2-decimal."""
+    The 2-decimal value column accumulates as INTEGER CENTS in state:
+    exact at any key cardinality × magnitude (cents stay far below
+    2^53 for any realistic total, where float64 accumulation drifts
+    after ~1e9 same-key additions of large values). The emitted double
+    is the nearest double to the exact decimal total — bit-identical
+    to a DECIMAL-summing SQL oracle's final DOUBLE cast."""
     import pandas as pd
 
     def totals(key, pdfs, state):
-        n, acc = state if state else (0, 0)
+        n, cents = state if state else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            if exact_cents:
-                acc += int((pdf[value_col] * 100).round().astype("int64").sum())
-            else:
-                acc += float(pdf[value_col].sum())
-        total = acc / 100.0 if exact_cents else acc
-        out = pd.DataFrame({key_col: [key[0]], "n_events": [n], "total_value": [total]})
-        return [out], (n, acc)
+            cents += int((pdf[value_col] * 100).round().astype("int64").sum())
+        out = pd.DataFrame(
+            {key_col: [key[0]], "n_events": [n], "total_value": [cents / 100.0]}
+        )
+        return [out], (n, cents)
 
     return stateful_map_stream(
         sdf,
         [key_col],
         totals,
         output_schema=f"{key_col} long, n_events long, total_value double",
-        state_schema="n long, cents long" if exact_cents else "n long, total double",
+        state_schema="n long, cents long",
     )
 
 

@@ -106,7 +106,7 @@ def test_collapse_probe_size_gate(spark, tmp_path, monkeypatch):
     """Round-12 session 4: for FILE-backed inputs below the size floor
     the probe job and the collapse are both skipped (the probe cannot
     repay itself there) — even on a maximally dup-heavy corpus — and
-    the env floor restores the probe, which then collapses. In-memory
+    a zero floor restores the probe, which then collapses. In-memory
     inputs have no size estimate and always fail open to the probe
     (pinned by test_collapse_probe_skips_on_distinct_corpus)."""
     p = str(tmp_path / "dups.parquet")
@@ -115,11 +115,11 @@ def test_collapse_probe_size_gate(spark, tmp_path, monkeypatch):
         "doc_id long, text string",
     ).write.parquet(p)
     docs = spark.read.parquet(p)
-    # default floor (256 MB): tiny scan -> no probe, uncollapsed
+    # default floor (1 MiB): tiny scan -> no probe, uncollapsed
     _, members = dedup._collapse_exact(docs, "doc_id", "text")
     assert members is None
     # floor 0: probe runs and the dup-heavy corpus collapses
-    monkeypatch.setenv("SPARK_GRAFT_COLLAPSE_PROBE_MIN_BYTES", "0")
+    monkeypatch.setattr(dedup, "_COLLAPSE_PROBE_MIN_BYTES", 0)
     _, members = dedup._collapse_exact(docs, "doc_id", "text")
     assert members is not None
     assert {(r[0], r[1]) for r in members.collect()} == {
@@ -180,8 +180,8 @@ def test_dedup_groups_transitive_closure(spark):
 def test_dedup_groups_path_chain(spark):
     """A 50-hop duplicate chain (path graph): large-star/small-star
     must converge in O(log n) rounds where min-label propagation needs
-    O(diameter). 8 rounds suffice for alternating; label propagation
-    capped at 5 rounds must fail loudly rather than mislabel."""
+    O(diameter). 8 rounds suffice; capped at 1 round it must fail
+    loudly rather than mislabel."""
     from malstrom_spark.functions.dedup import dedup_groups
 
     n = 50
@@ -195,26 +195,20 @@ def test_dedup_groups_path_chain(spark):
     }
     assert got == {i: 0 for i in range(n)} | {n: n}
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_groups(pairs, ids, "doc_id", max_iters=5, algorithm="label")
+        dedup_groups(pairs, ids, "doc_id", max_iters=1)
 
 
 def test_dedup_groups_algorithms_agree(spark):
-    """Both CC algorithms reach the identical fixpoint on a graph with
+    """The CC fixpoint equals Python union-find on a graph with
     chains, a triangle, reversed/duplicate/self edges and singletons."""
     from malstrom_spark.functions.dedup import dedup_groups
 
+    edges = [(0, 3), (3, 5), (5, 0), (7, 6), (8, 7), (9, 9), (2, 1), (2, 1), (10, 4)]
     ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(0, 3), (3, 5), (5, 0), (7, 6), (8, 7), (9, 9), (2, 1), (2, 1), (10, 4)],
-        "id_a long, id_b long",
-    )
-    alt = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
-    lab = {
-        r.doc_id: r.group_id
-        for r in dedup_groups(pairs, ids, "doc_id", algorithm="label").collect()
-    }
-    assert alt == lab
-    assert alt == {0: 0, 3: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 1: 1, 2: 1, 4: 4, 10: 4, 11: 11}
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {r.doc_id: r.group_id for r in dedup_groups(pairs, ids, "doc_id").collect()}
+    assert got == _uf_labels(range(12), edges)
+    assert got == {0: 0, 3: 0, 5: 0, 6: 6, 7: 6, 8: 6, 9: 9, 1: 1, 2: 1, 4: 4, 10: 4, 11: 11}
 
 
 def _uf_labels(n_ids, pairs):

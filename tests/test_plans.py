@@ -203,8 +203,46 @@ def test_no_rdd_access_in_package():
     assert not bad, f".rdd plan conversion in: {bad}"
 
 
+def test_env_reads_are_deployment_settings_only():
+    """The package reads only deployment settings from the environment
+    (core count, driver heap, spark-submit args). Tuning values are
+    module constants and Spark confs (`build_session(extra_conf=...)`):
+    a measured-and-rejected setting must not live on as an env knob.
+    AST-based: `os.environ.get/[]/in`, `os.getenv`, `environ` imported
+    bare — every read names its variable as a string literal, so an
+    unlisted or computed name fails."""
+    import ast
+    import pathlib
+
+    import malstrom_spark
+
+    allowed = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "PYSPARK_SUBMIT_ARGS"}
+
+    def is_env(n):  # `os.environ`, `environ`, `os.getenv`, `getenv`
+        return getattr(n, "attr", getattr(n, "id", None)) in ("environ", "getenv")
+
+    pkg = pathlib.Path(malstrom_spark.__file__).parent
+    bad = []
+    for p in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, ast.Call) and node.args and (
+                is_env(node.func) or is_env(getattr(node.func, "value", None))
+            ):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and is_env(node.value):
+                key = node.slice
+            elif isinstance(node, ast.Compare) and any(map(is_env, node.comparators)):
+                key = node.left
+            else:
+                continue
+            name = key.value if isinstance(key, ast.Constant) else None
+            if name not in allowed:
+                bad.append(f"{p.relative_to(pkg)}:{node.lineno} {name!r}")
+    assert not bad, f"environment reads outside the deployment settings: {bad}"
+
+
 def test_cc_rounds_release_checkpoint_storage(spark):
-    """_groups_alternating frees the prior round's localCheckpoint
+    """dedup_groups frees the prior round's localCheckpoint
     blocks as soon as the fixpoint test has run, so executor storage
     stays O(1) in rounds: after convergence on a multi-round chain, at
     most 2 checkpointed RDDs (initial canonical edges were already

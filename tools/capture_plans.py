@@ -1,7 +1,7 @@
 """Capture .explain("formatted") for headline queries into files.
 
 Usage: python tools/capture_plans.py <outdir> <suffix> [query ...]
-e.g.   python tools/capture_plans.py plans/r12 before
+e.g.   python tools/capture_plans.py plans/r13 before
 Writes <outdir>/<query>_<suffix>.txt for each query (all headline
 queries when none are named).
 """
